@@ -2436,11 +2436,14 @@ class LakeTable:
         # file size you want (used by large merges, whose plan already
         # avoids shuffling the target).
         if layout == "single":
-            # repartition(1), NOT coalesce(1): coalesce removes the stage
-            # boundary, so the upstream scan+merge compute would collapse
-            # into the same single task as the write. The extra round-robin
-            # shuffle moves only the small output rows; the write task
-            # still emits exactly one right-sized file.
+            # repartition(1), NOT coalesce(1): for callers whose upstream
+            # plan is parallel work (the merge-on-read delta, a large
+            # window merge) coalesce would pull that compute into the
+            # write's single task. The round-robin shuffle moves only the
+            # small output rows. A caller whose whole plan fits one task
+            # coalesces upstream itself and writes 'natural' instead (the
+            # small CoW merge: one shuffle-free job, see
+            # writer._window_merge).
             df = df.repartition(1)
         elif layout == "range" and range_split:
             # Range-split by the given columns (the PK for merges): each
@@ -2542,10 +2545,15 @@ class LakeTable:
                 self.fs.delete(os.path.join(self.dir, f), missing_ok=True)
         return files, stats
 
-    # Above this many freshly-written files, footer-stat/bloom harvesting
-    # fans out as a Spark job instead of a serial driver loop — at bulk
-    # scale the driver reading back every written file is the bottleneck.
-    HARVEST_SPARK_THRESHOLD = 8
+    # Above this many freshly written bytes, footer-stat/bloom harvesting
+    # fans out as a Spark job instead of a serial driver loop. The job
+    # costs ~0.3-0.45 s before it reads a byte (scheduling plus Python
+    # worker start-up); the driver harvests ~3 ms per MB (a 141 MB,
+    # 2M-row file: ~0.4 s, Bloom hashing dominates; twelve ~50 KB merge
+    # outputs: 13 ms). Bytes, not file count, is what the driver loop
+    # pays for: a partitioned micro-batch writes one small file per
+    # partition dir.
+    HARVEST_SPARK_MIN_BYTES = 128 * 1024 * 1024
 
     def _harvest(
         self,
@@ -2560,7 +2568,7 @@ class LakeTable:
         (files must be executor-readable, as with membership_filter_spark)."""
         if not abs_files or (not stat_cols and not bloom_col):
             return {}
-        if len(abs_files) <= self.HARVEST_SPARK_THRESHOLD:
+        if _total_bytes(abs_files) <= self.HARVEST_SPARK_MIN_BYTES:
             return {
                 rel: s
                 for rel, s in zip(
@@ -2569,6 +2577,7 @@ class LakeTable:
                 )
                 if s
             }
+        REGISTRY.inc("write.harvestSpark")
         sc = self.spark.sparkContext
         pairs = list(zip(abs_files, rel_files))
         results = (
@@ -2577,6 +2586,18 @@ class LakeTable:
             .collect()
         )
         return {rel: s for rel, s in results if s}
+
+
+def _total_bytes(abs_files: list[str]) -> int:
+    """Summed size of freshly written local files (unknown sizes count
+    as 0, like ``_harvest_one``'s ``__bytes``)."""
+    total = 0
+    for p in abs_files:
+        try:
+            total += os.path.getsize(p)
+        except OSError:
+            pass
+    return total
 
 
 MAX_STATS_COLUMNS = 12

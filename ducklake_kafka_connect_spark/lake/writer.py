@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..metrics import REGISTRY
-from ..schema.reconcile import INSERTED_AT, plan_evolution
+from ..schema.reconcile import INSERTED_AT, ReconcileError, plan_evolution
 from .partitioning import (
     canon_partition_value,
     dir_key_to_canon_tuple,
@@ -118,10 +118,26 @@ MERGE_REBALANCE_MAX_BYTES = int(
 # (rewrite-all window-merge; the merge is the write job).
 MERGE_SMALL_TABLE_BYTES = 32 * 1024 * 1024
 
-# Merge batches whose optimizer size estimate is at or below this are
-# coalesced to 4 partitions before toArrow (stream-count overhead wins);
-# larger/unknown estimates keep their parallelism (compute wins)
+# Batches whose optimizer size estimate is at or below this are coalesced
+# before a driver-bound action: to 4 partitions before toArrow (stream-
+# count overhead wins), to ONE task under the merge-planning and ingest-
+# routing aggregates (no shuffle: one job instead of a map job plus a
+# result job); larger/unknown estimates keep their parallelism (compute
+# wins)
 EVAL_COALESCE_MAX_BYTES = 4 * 1024 * 1024
+
+
+def one_task_if_small(df: DataFrame) -> DataFrame:
+    """``df.coalesce(1)`` when the optimizer estimates it at or below
+    EVAL_COALESCE_MAX_BYTES, else ``df``. Under a grouped or global
+    aggregate a single partition satisfies the required distribution, so
+    the aggregate runs in the scan's own stage."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return df
+    return df.coalesce(1) if est <= EVAL_COALESCE_MAX_BYTES else df
+
 
 # Within the small-table window-merge, unions at or below this many rows
 # run as ONE shuffle-free task; above it the window distributes across a
@@ -139,8 +155,11 @@ ARROW_MERGE_MAX_BYTES = 32 * 1024 * 1024
 # entry just misses. In-process analogue of an embedded engine's buffer
 # pool: sequential small merges stop re-reading the whole table.
 _ARROW_TARGET_CACHE: dict = {}
-# merge_many's synthetic (batch ordinal, order) column — rides the merge
-# plan, never enters the table schema
+# Reserved name of an ORDER column that rides the write but never enters
+# the table schema: merge_many's synthetic (batch ordinal, order) struct,
+# and the transport offset the ingest pipeline hands over so last-write-
+# wins is resolved once, inside the merge (a creating write dedups by it
+# before the append)
 EPHEMERAL_ORDER = "__merge_seq_ord"
 # Auto-compaction (DucklakeConnectionFactory.java:88-92 analogue, Delta
 # autoOptimize shape): a commit that leaves a partition with more than
@@ -474,7 +493,9 @@ class LakeWriter:
             df = _seq.attach_sequence(df, col, lo, st["increment"], counts)
         return df
 
-    def _enforce_constraints(self, df: DataFrame, manifest=_RESOLVE) -> None:
+    def _enforce_constraints(
+        self, df: DataFrame, manifest=_RESOLVE, dedup_order: str | None = None
+    ) -> None:
         """Reject the batch if any CHECK constraint is violated. One
         aggregate job computes every constraint's violation count at
         once. A row violates only when the predicate evaluates FALSE;
@@ -505,7 +526,11 @@ class LakeWriter:
         (at 100 TB a manifest is O(files) big; a second chain resolve
         per 10k-row CDC batch is real money). ``None`` means the table
         is known to not exist (no stored constraints possible); the
-        default self-resolves, for callers with no manifest in hand."""
+        default self-resolves, for callers with no manifest in hand.
+
+        ``dedup_order``: judge only each key's last write by this column
+        (a batch whose in-batch duplicates are resolved inside the merge
+        — rows that never land are not checked)."""
         checks = dict(self.check_constraints)
         if manifest is LakeWriter._RESOLVE:
             m = self.table.manifest() if self.table.exists() else None
@@ -522,6 +547,8 @@ class LakeWriter:
                 checks[f"notnull_{col}"] = f"`{col}` IS NOT NULL"
         if not checks:
             return
+        if dedup_order is not None:
+            df = _dedup_last_wins(df, self.pk, dedup_order)
         # constraints run BEFORE the conform projection, so the
         # evaluation frame extends (lazily — same single aggregate, no
         # extra job) to what the conform will land: omitted columns fill
@@ -592,9 +619,18 @@ class LakeWriter:
             if self.pk and pre_existed:
                 self.merge(df, order_col=order_col)
             else:
-                self.append(df)
+                self.append(self._resolve_ephemeral(df, order_col))
         finally:
             self._txn = None
+
+    def _resolve_ephemeral(self, df: DataFrame, order_col: str | None) -> DataFrame:
+        """An append never stores the ephemeral order column; on a keyed
+        table (the creating write) it first picks each key's last write."""
+        if order_col != EPHEMERAL_ORDER or order_col not in df.columns:
+            return df
+        if self.pk:
+            df = _dedup_last_wins(df, self.pk, order_col)
+        return df.drop(order_col)
 
     def write_many(
         self,
@@ -607,7 +643,12 @@ class LakeWriter:
         batches win per key). Falls back to sequential writes when the
         batches can't union (cross-batch type promotion goes through the
         schema ladder one merge at a time). ``txn`` as in write() —
-        the whole group is one epoch, skipped wholesale on replay."""
+        the whole group is one epoch, skipped wholesale on replay.
+
+        A column whose types conflict (double vs string) DOES union —
+        unionByName coerces it to string and the write's cast then fails
+        the whole group; callers that must land the rest split such
+        batches out first with :meth:`schema_conflicts`."""
         dfs = [d for d in dfs if d is not None]
         if not dfs:
             return
@@ -633,7 +674,7 @@ class LakeWriter:
                 for d in dfs[1:]:
                     u = u.unionByName(d, allowMissingColumns=True)
                 self._txn = txn
-                self.append(u)
+                self.append(self._resolve_ephemeral(u, order_col))
         except Exception as e:
             # unionByName raises eagerly (before any write/commit) on
             # incompatible column types — replay batch-at-a-time so the
@@ -646,6 +687,34 @@ class LakeWriter:
             self.write(dfs[-1], order_col=order_col, txn=txn)
         finally:
             self._txn = None
+
+    def schema_conflicts(self, dfs: Sequence[DataFrame]) -> "dict[int, ReconcileError]":
+        """{index: error} for the batches whose schema would not reconcile
+        if ``dfs`` were written in order: each batch's schema is folded
+        over the table's (or, for a table not yet created, the first
+        batch's) the way sequential writes evolve it, and a batch that
+        conflicts is left out of the fold. Nothing is read but the
+        manifest."""
+        skip = (INSERTED_AT, EPHEMERAL_ORDER)
+
+        def fields(schema: T.StructType) -> T.StructType:
+            return T.StructType([f for f in schema.fields if f.name not in skip])
+
+        running = (
+            fields(self.table.manifest().schema) if self.table.exists() else None
+        )
+        out: dict[int, ReconcileError] = {}
+        for i, d in enumerate(dfs):
+            incoming = fields(d.schema)
+            try:
+                running = (
+                    incoming
+                    if running is None
+                    else plan_evolution(running, incoming).final_schema
+                )
+            except ReconcileError as e:
+                out[i] = e
+        return out
 
     # ---------- data inlining (lake/inline.py) ----------
 
@@ -1399,12 +1468,7 @@ class LakeWriter:
             u = tagged[0]
             for t in tagged[1:]:
                 u = u.unionByName(t, allowMissingColumns=True)
-            self._merge(
-                u,
-                order_col=EPHEMERAL_ORDER,
-                tombstone_col=tombstone_col,
-                ephemeral_order=True,
-            )
+            self._merge(u, order_col=EPHEMERAL_ORDER, tombstone_col=tombstone_col)
 
     def _chain_advanced(self, planned_version: int) -> bool:
         """Stale-plan check under the table lock: has the chain moved
@@ -1425,10 +1489,10 @@ class LakeWriter:
         df: DataFrame,
         order_col: str | None = None,
         tombstone_col: str | None = None,
-        ephemeral_order: bool = False,
     ) -> None:
         if not self.pk:
             raise ValueError(f"merge() on table {self.table.name} requires pk columns")
+        ephemeral_order = order_col == EPHEMERAL_ORDER
         # one manifest resolve: the pre-lock planning manifest doubles as
         # the constraint source and seeds the FIRST _merge_once attempt
         # (replans after a commit conflict re-resolve, as they must)
@@ -1445,13 +1509,15 @@ class LakeWriter:
         # tombstoned rows are DELETES — they carry no insertable values,
         # so constraints (incl. NOT NULL) must not judge them: a narrow
         # pk-only delete batch against a NOT NULL table is legitimate
+        dedup_order = order_col if ephemeral_order else None
         if tombstone_col and tombstone_col in df.columns:
             self._enforce_constraints(
                 df.filter(~F.coalesce(F.col(tombstone_col), F.lit(False))),
                 pre,
+                dedup_order,
             )
         else:
-            self._enforce_constraints(df, pre)
+            self._enforce_constraints(df, pre, dedup_order)
         # The rewrite set is planned against a manifest read OUTSIDE the
         # table lock; if another commit lands before this merge takes the
         # lock, the planned file list is stale (re-emitting rows a
@@ -1622,7 +1688,7 @@ class LakeWriter:
                 ).alias("parts")
             )
         with REGISTRY.timer("merge.planAgg"):
-            row = probe.agg(*agg_cols).collect()[0]
+            row = one_task_if_small(probe).agg(*agg_cols).collect()[0]
         n_src = row["n"]
         bounds = {"lo": row["lo"], "hi": row["hi"]}
         src_parts = {tuple(p) for p in row["parts"]} if part_cols else set()
@@ -1752,9 +1818,21 @@ class LakeWriter:
         # destroyed the range layout's key-disjointness.
         n_out = max(1, min(MERGE_RANGE_MAX_FILES, _range_file_count(est_rows, est_bytes)))
         if small:
-            # collapse the (small, cached) batch to one task so every
-            # downstream stage schedules 1-2 tasks, not 32 near-empty ones
-            merged = _window_merge(target, raw.coalesce(1), self.pk, out_cols, order_col)
+            # One output file (n_out == 1 implies a union of at most
+            # MERGE_TARGET_FILE_ROWS): the whole merge (rewrite-set scan,
+            # batch, window, write) runs as ONE shuffle-free task — one
+            # Spark job, the small-table path's shape. Several range
+            # files: collapse the (small, cached) batch to one task so
+            # every downstream stage schedules 1-2 tasks, not 32
+            # near-empty ones.
+            merged = _window_merge(
+                target,
+                raw if n_out == 1 else raw.coalesce(1),
+                self.pk,
+                out_cols,
+                order_col,
+                single_partition=n_out == 1,
+            )
         else:
             # the three broadcast joins (src deduped lazily here)
             untouched = target.join(bcast(src_keys), on=self.pk, how="left_anti")
@@ -1809,7 +1887,7 @@ class LakeWriter:
                     )
                 else:
                     if small:
-                        layout = "single"
+                        layout = "natural"  # one file from one task already
                     elif est_bytes <= MERGE_REBALANCE_MAX_BYTES:
                         layout = "rebalance"  # right-sized files, no compact
                     else:
@@ -2324,14 +2402,20 @@ class LakeWriter:
 
             sort_cols = ["__pri"]
             if order_col and ephemeral_order:
+                # batch-only order: merge_many's (ordinal, order) struct
+                # or a plain transport offset
                 st = batch.column(order_col)
-                s_pd = pc.struct_field(st, "s").to_pandas()
-                o_pd = pc.struct_field(st, "o").to_pandas()
-                if o_pd.dtype == object:
-                    return None
-                key_df["__s"] = _batch_only(s_pd)
-                key_df["__o"] = _batch_only(o_pd)
-                sort_cols += ["__s", "__o"]
+                keys = (
+                    [pc.struct_field(st, "s"), pc.struct_field(st, "o")]
+                    if pa.types.is_struct(st.type)
+                    else [st]
+                )
+                for i, k in enumerate(keys):
+                    k_pd = k.to_pandas()
+                    if k_pd.dtype == object:
+                        return None
+                    key_df[f"__o{i}"] = _batch_only(k_pd)
+                    sort_cols.append(f"__o{i}")
             elif order_col:
                 o_pd = combined.column(order_col).to_pandas()
                 if o_pd.dtype == object:

@@ -41,6 +41,7 @@ def infer_batch_schema(
     value_col: str = "value",
     sample_size: int = DEFAULT_SAMPLE,
     conflicts_out: dict | None = None,
+    sample: list | None = None,
 ) -> tuple[T.StructType, int]:
     """Sample raw JSON strings and infer the unified batch schema.
 
@@ -49,12 +50,15 @@ def infer_batch_schema(
     from_json later and be DLQ-routed) — mirroring the reference's
     DLQ triage rather than failing the whole batch. Pass a dict as
     ``conflicts_out`` to receive {field: {types, samples}} describing
-    the conflicts (used to enrich DLQ error notes)."""
-    sample = [
-        r[0]
-        for r in df.select(value_col).limit(sample_size).collect()
-        if r[0] is not None
-    ]
+    the conflicts (used to enrich DLQ error notes). ``sample``: raw
+    values the caller already collected (the ingest pipeline's routing
+    aggregate) — no sampling job then."""
+    if sample is None:
+        sample = [
+            r[0]
+            for r in df.select(value_col).limit(sample_size).collect()
+            if r[0] is not None
+        ]
     unified: T.StructType | None = None
     rejects = 0
     for raw in sample:
@@ -104,6 +108,7 @@ def decode_json(
     sample_size: int = DEFAULT_SAMPLE,
     keep_cols: list[str] | None = None,
     conflicts_out: dict | None = None,
+    sample: list | None = None,
 ) -> DataFrame:
     """Decode a column of schemaless JSON into typed columns.
 
@@ -111,9 +116,11 @@ def decode_json(
     through, e.g. kafka metadata) and ``_corrupt`` holding the raw value
     for rows that failed to parse (DLQ candidates). ``conflicts_out``
     (a dict) receives per-field conflict info from inference, for DLQ
-    error enrichment."""
+    error enrichment; ``sample`` as in :func:`infer_batch_schema`."""
     if schema is None:
-        schema, _ = infer_batch_schema(df, value_col, sample_size, conflicts_out)
+        schema, _ = infer_batch_schema(
+            df, value_col, sample_size, conflicts_out, sample
+        )
     parse_schema = _parse_schema(schema)
     parsed = df.withColumn(
         "__rec",

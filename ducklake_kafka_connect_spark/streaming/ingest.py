@@ -32,9 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake import LakeCatalog, LakeWriter
-from ..lake.writer import _dedup_last_wins
+from ..lake.writer import EPHEMERAL_ORDER, _dedup_last_wins, one_task_if_small
+from ..metrics import REGISTRY
 from ..schema.reconcile import ReconcileError
-from ..sources.json_decode import CORRUPT_COL, decode_json, split_dlq
+from ..sources.json_decode import CORRUPT_COL, DEFAULT_SAMPLE, decode_json, split_dlq
 from ..lake.relation_cache import local_rows_df
 
 _TOPIC_RE = re.compile(r"^[A-Za-z0-9._-]+$")
@@ -172,6 +173,16 @@ class IngestConfig:
     def spec_for(self, table: str) -> TableSpec:
         return self.tables.get(table, TableSpec())
 
+    def non_json_topics(self) -> set[str]:
+        """Topics whose table decodes a format other than JSON: mapped
+        topics plus identity-mapped ones (a topic named after its table)."""
+        out = {t for t, tbl in self.topic2table.items() if self.spec_for(tbl).format != "json"}
+        out |= {
+            tbl for tbl, spec in self.tables.items()
+            if spec.format != "json" and tbl not in self.topic2table
+        }
+        return out
+
 
 class IngestPipeline:
     """foreachBatch sink writing decoded records into lake tables."""
@@ -191,12 +202,11 @@ class IngestPipeline:
         onto one table land as ONE group commit (write_many) instead of
         N sequential merges — the reference consolidates cross-topic
         batches per table the same way (BatchConsolidation)."""
-        # r14 (guide §5 cache only what's reused): the incoming frame is
-        # consumed by the topic scan AND each topic slice's decode — an
-        # expensive source (a decoder/synthesizer upstream) would
-        # otherwise re-execute per consumer. Micro-batches are
-        # threshold-bounded (E1), so one persist for the duration of the
-        # batch is safe; released in the finally.
+        # The incoming frame is consumed by the routing aggregate AND
+        # each topic slice's decode — an expensive source (Kafka, an
+        # upstream decoder) would otherwise re-execute per consumer.
+        # Micro-batches are threshold-bounded (E1), so one persist for
+        # the duration of the batch is safe; released in the finally.
         persisted = False
         try:
             if batch.storageLevel.useMemory or batch.storageLevel.useDisk:
@@ -205,49 +215,101 @@ class IngestPipeline:
                 batch = batch.persist()
                 persisted = True
             if "topic" in batch.columns:
-                topics = [
-                    r[0] for r in batch.select("topic").distinct().collect()
-                ]
+                samples = self._route(batch)
             else:
-                topics = [None]
+                samples = {None: None}
             by_table: dict[str, list] = {}
-            for topic in topics:
+            for topic, sample in samples.items():
                 part = (
                     batch.filter(F.col("topic") == topic) if topic else batch
                 )
                 table = self.config.table_for(topic) if topic else "events"
-                by_table.setdefault(table, []).append(part)
+                by_table.setdefault(table, []).append((part, sample))
             for table, parts in by_table.items():
                 self._ingest_table_batches(parts, table, epoch_id=epoch_id)
         finally:
             if persisted:
                 batch.unpersist()
 
+    def _route(self, batch: DataFrame) -> dict:
+        """{topic: schema-inference sample} from ONE aggregate
+        over the batch: the topic set, plus each JSON topic's first
+        DEFAULT_SAMPLE non-null values in (partition, offset) order — the
+        sample the decode would otherwise collect in a job of its own.
+        Other formats get an empty sample, which their decoders ignore.
+
+        ``collect_top_k`` is PySpark's internal (undocumented) entry
+        point; where it is missing or refused, the topic set comes from a
+        plain ``distinct`` and each decode samples its slice itself."""
+        from py4j.protocol import Py4JError
+        from pyspark.errors import AnalysisException
+
+        try:
+            from pyspark.sql.internal import InternalFunction
+
+            return self._route_sampled(batch, InternalFunction.collect_top_k)
+        except (ImportError, AttributeError, AnalysisException, Py4JError):
+            REGISTRY.inc("ingest.routeUnsampled")
+            return {r[0]: None for r in batch.select("topic").distinct().collect()}
+
+    def _route_sampled(self, batch: DataFrame, collect_top_k) -> dict:
+        order = [c for c in ("partition", "offset") if c in batch.columns]
+        json_topic = ~F.col("topic").isin(list(self.config.non_json_topics()))
+        value = F.col("value")
+        if dict(batch.dtypes).get("value") == "binary":
+            value = value.cast("string")  # as _decode does
+        # collect_top_k keeps a bounded heap per group (reverse: the k
+        # SMALLEST, ascending), so the sample costs O(k) per topic
+        # whatever the batch size; NULLs (tombstones, other formats) are
+        # skipped
+        top = collect_top_k(
+            F.when(
+                json_topic & value.isNotNull(),
+                F.struct(*[F.col(c) for c in order], value.alias("v")),
+            ),
+            DEFAULT_SAMPLE,
+            True,
+        )
+        rows = (
+            one_task_if_small(batch).groupBy("topic").agg(top.alias("s")).collect()
+        )
+        # a NULL/empty topic routes the whole batch (see process_batch),
+        # so its decode samples the batch itself
+        return {
+            r["topic"]: [x["v"] for x in r["s"] or ()] if r["topic"] else None
+            for r in rows
+        }
+
     def _ingest_table_batches(
         self, parts: list, table: str, epoch_id: int = -1
     ) -> None:
+        """``parts``: (topic slice, JSON schema sample or None) pairs."""
         spec = self.config.spec_for(table)
         goods: list[DataFrame] = []
         bads: list[DataFrame] = []
         cached: list[DataFrame] = []
-        for part in parts:
+        # last-write-wins by transport offset (SURVEY risk #2) is resolved
+        # ONCE, inside the merge: the offset rides the write as the
+        # writer's ephemeral order column and never enters the schema.
+        # Constraint routing and transforms must see deduplicated rows,
+        # so those tables resolve it here instead.
+        order_col = None
+        dedup_here = bool(spec.check_constraints or spec.transform is not None)
+        for part, sample in parts:
             keep = [c for c in ("offset",) if c in part.columns]
-            good, bad = self._decode(part, spec, keep, cached=cached)
-            order_col = "offset" if "offset" in good.columns else None
-            if order_col and spec.id_columns:
-                # offset orders last-write-wins dedup within the batch
-                # (SURVEY risk #2); it is a transport column — dedup
-                # here, then drop it so it never enters the table schema.
-                good = _dedup_last_wins(good, spec.id_columns, order_col)
-            # multi-consumer point: the decoded frame feeds the MERGE
-            # planning aggregate, the write, the constraint split, and
-            # the DLQ append — each is its own Spark job, and without a
-            # persist every one re-runs the full decode. Micro-batches
-            # are threshold-bounded (E1), so MEMORY_AND_DISK is safe;
-            # released in the finally below.
-            good = good.persist()
-            bad = bad.persist()
-            cached += [good, bad]
+            good, bad = self._decode(part, spec, keep, cached=cached, sample=sample)
+            if "offset" in good.columns and spec.id_columns:
+                if dedup_here:
+                    REGISTRY.inc("ingest.dedupBeforeWrite")
+                    good = _dedup_last_wins(good, spec.id_columns, "offset")
+                    # consumed by both sides of the constraint split: one
+                    # dedup shuffle, not two
+                    good = good.persist()
+                    cached.append(good)
+                else:
+                    good = good.withColumnRenamed("offset", EPHEMERAL_ORDER)
+                    keep = []
+                    order_col = EPHEMERAL_ORDER
             if spec.check_constraints:
                 good, bad = self._route_constraint_violations(good, bad, spec)
             if spec.transform is not None:
@@ -269,37 +331,41 @@ class IngestPipeline:
         # the manifest-marker check — APPEND tables stop duplicating on
         # restart, MERGE tables stop paying a no-op replay write
         txn = (f"ingest:{table}", epoch_id) if epoch_id >= 0 else None
-        try:
-            try:
-                writer.write_many(goods, txn=txn)
-            except ReconcileError:
-                # group write hit a schema conflict — replay batch-at-a-
-                # time so only the offending slices DLQ, not the whole
-                # group
-                for i, good in enumerate(goods):
-                    try:
-                        writer.write(good)
-                    except ReconcileError as e:
-                        # whole-batch schema conflict → route every row
-                        # to the DLQ; the note carries the column, both
-                        # types, and sample values from the offending
-                        # batch (SinkRecordToArrowConverter.java:305-385
-                        # parity)
-                        from ..schema.reconcile import (
-                            enriched_reconcile_message,
-                        )
 
-                        note = enriched_reconcile_message(e, good)
-                        bads[i] = bads[i].unionByName(
-                            good.select(
-                                F.to_json(F.struct(*good.columns)).alias(
-                                    "raw_value"
-                                ),
-                                F.lit(f"reconcile_error: {note}").alias("error"),
-                                F.current_timestamp().alias("_dlq_at"),
-                            ),
-                            allowMissingColumns=True,
-                        )
+        try:
+            # A slice whose column type conflicts with the table (or with
+            # an earlier slice of the group) would fail the whole group
+            # commit: the union coerces the column and the write's cast
+            # fails. Such a slice is dead-lettered whole; the rest land
+            # as one group.
+            from ..schema.reconcile import enriched_reconcile_message
+
+            conflicts = writer.schema_conflicts(goods)
+            for i, e in conflicts.items():
+                good = goods[i]
+                if order_col:
+                    # last write per key, as the merge would have landed
+                    # it; the transport offset never enters the payload
+                    good = _dedup_last_wins(
+                        good, spec.id_columns, order_col
+                    ).drop(order_col)
+                # the note carries the column, both types, and sample
+                # values from the offending slice
+                # (SinkRecordToArrowConverter.java:305-385 parity)
+                note = enriched_reconcile_message(e, good)
+                bads[i] = bads[i].unionByName(
+                    good.select(
+                        F.to_json(F.struct(*good.columns)).alias("raw_value"),
+                        F.lit(f"reconcile_error: {note}").alias("error"),
+                        F.current_timestamp().alias("_dlq_at"),
+                    ),
+                    allowMissingColumns=True,
+                )
+            writer.write_many(
+                [g for i, g in enumerate(goods) if i not in conflicts],
+                order_col=order_col,
+                txn=txn,
+            )
             bad = bads[0]
             for b in bads[1:]:
                 bad = bad.unionByName(b, allowMissingColumns=True)
@@ -353,17 +419,18 @@ class IngestPipeline:
         spec: TableSpec,
         keep: list[str],
         cached: "list | None" = None,
+        sample: list | None = None,
     ):
         """Per-table format dispatch (the reference's value.converter
         choice: JsonConverter / AvroConverter / ArrowIpcConverter, plus
         the mixed per-batch sniff of A7).
 
-        ``cached`` (r14, guide §2.4): the good/bad DLQ split consumes
-        the SAME decoded frame twice, and each side's own persist used
-        to re-run the whole decode to materialize. Persisting the
+        ``cached``: the good/bad DLQ split consumes the SAME decoded
+        frame twice (the write and the DLQ check). Persisting the
         pre-split decoded frame (appended to ``cached`` so the caller's
         finally releases it) makes both sides cache reads — one decode
-        pass per batch part instead of two."""
+        pass per batch part instead of two. ``sample``: the JSON schema-
+        inference sample the routing aggregate already collected."""
 
         def _split(decoded, **kw):
             if cached is not None:
@@ -379,7 +446,8 @@ class IngestPipeline:
                 part = part.withColumn("value", F.col("value").cast("string"))
             conflicts: dict = {}
             decoded = decode_json(
-                part, value_col="value", keep_cols=keep, conflicts_out=conflicts
+                part, value_col="value", keep_cols=keep,
+                conflicts_out=conflicts, sample=sample,
             )
             return _split(decoded, error_note=conflict_note(conflicts))
         if spec.format == "avro_registry":

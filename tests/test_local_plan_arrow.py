@@ -64,7 +64,7 @@ def test_project_over_local_relation_folds(spark):
     assert got.equals(df.toArrow())
 
 
-def test_zero_jobs(spark):
+def test_zero_jobs(spark, spark_jobs):
     df = local_rows_df(
         spark, [(i, "v") for i in range(50)],
         T.StructType(
@@ -72,11 +72,9 @@ def test_zero_jobs(spark):
         ),
     )
     local_plan_arrow(df)  # warm any lazy init
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    assert local_plan_arrow(df) is not None
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "local_plan_arrow scheduled a Spark job"
+    with spark_jobs() as jobs:
+        assert local_plan_arrow(df) is not None
+    assert jobs.n == 0, "local_plan_arrow scheduled a Spark job"
 
 
 def test_non_local_plan_falls_back(spark):

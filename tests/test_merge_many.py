@@ -199,3 +199,52 @@ class TestIngestGroupCommit:
         assert got[2] in ("a2", "b2")  # cross-topic same-key: either slice may win
         # both topics landed in at most two commits (create+append, merge)
         assert t.current_version() <= 2
+
+    @pytest.mark.parametrize("id_columns", [[], ["id"]], ids=["keyless", "keyed"])
+    def test_conflicting_slice_dead_letters_alone(self, spark, cat, id_columns):
+        """One topic slice whose column type conflicts with the table
+        (double vs string) inside a multi-topic group: the other slice
+        lands, the conflicting slice's rows go to the DLQ — the group's
+        union must not coerce the column and fail the whole batch. On a
+        keyed table both slices carry in-batch duplicate keys in shuffled
+        offset order: the table and the DLQ each hold each key's last
+        write by offset, as a per-slice dedup before the write would."""
+        import json
+
+        from ducklake_kafka_connect_spark.streaming.ingest import (
+            IngestConfig,
+            IngestPipeline,
+            TableSpec,
+        )
+
+        cfg = IngestConfig(
+            topic2table={"t_a": "merged", "t_b": "merged"},
+            tables={"merged": TableSpec(id_columns=id_columns, auto_create=True)},
+        )
+        pipe = IngestPipeline(cat, cfg)
+        schema = "topic string, offset long, value string"
+        pipe.process_batch(
+            spark.createDataFrame([("t_a", 0, '{"id": 0, "x": 0.5}')], schema), 0
+        )
+        rows = [
+            ("t_a", 7, '{"id": 1, "x": 1.7}'),
+            ("t_a", 2, '{"id": 2, "x": 2.5}'),
+            ("t_a", 3, '{"id": 1, "x": 1.3}'),
+            ("t_b", 9, '{"id": 4, "x": "d9"}'),
+            ("t_b", 4, '{"id": 3, "x": "c4"}'),
+            ("t_b", 6, '{"id": 3, "x": "c6"}'),
+            ("t_b", 5, '{"id": 4, "x": "d5"}'),
+            ("t_b", 1, '{"id": 3, "x": "c1"}'),
+        ]
+        pipe.process_batch(spark.createDataFrame(rows, schema), 1)
+        got = sorted((r["id"], r["x"]) for r in cat.table("merged").read().collect())
+        dlq = cat.table("merged_dlq").read().collect()
+        dead = sorted((v["id"], v["x"]) for v in (json.loads(r["raw_value"]) for r in dlq))
+        if id_columns:
+            assert got == [(0, 0.5), (1, 1.7), (2, 2.5)]
+            assert dead == [(3, "c6"), (4, "d9")]
+        else:
+            assert got == [(0, 0.5), (1, 1.3), (1, 1.7), (2, 2.5)]
+            assert dead == [(3, "c1"), (3, "c4"), (3, "c6"), (4, "d5"), (4, "d9")]
+        assert all(r["error"].startswith("reconcile_error: ") for r in dlq)
+        assert all(set(json.loads(r["raw_value"])) == {"id", "x"} for r in dlq)
